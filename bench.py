@@ -12,7 +12,7 @@ to stderr.
 
 Env:
   SPARK_GRAFT_SF_DIR   input tables dir   (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[N]           (default 32)
+  SPARK_GRAFT_CPUS     local[N]           (default: the cores this process may use)
   SPARK_GRAFT_AMPLIFY  corpus replication (default 400; 0/1 = no amplification)
 
 The headline measures the fused tokenize->tree->extract mapInArrow kernel
@@ -37,7 +37,7 @@ import time
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     amplify = int(os.environ.get("SPARK_GRAFT_AMPLIFY", "400"))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0

@@ -21,4 +21,6 @@ Public surface:
   core.oracle / core.diff              reference-exact executable semantics
 """
 
+from . import _zipcache  # noqa: F401  (importing installs the zip directory cache)
+
 __version__ = "0.1.0"

@@ -25,6 +25,7 @@ SQL-oracle-checkable at any sf.
 
 from __future__ import annotations
 
+import threading
 import weakref
 
 from pyspark.sql import DataFrame
@@ -41,8 +42,11 @@ from .text import WORD_HASH
 # the still-live second query (observed: gate loops that rebuild
 # extract_links re-ran the parse kernel 3x after the previous iteration's
 # result was GC'd). Refcounting by semantic hash makes release happen only
-# when the LAST registered owner dies.
+# when the LAST registered owner dies. Finalizers run on whichever thread
+# drops the last reference, so every read-modify-write holds the lock (the
+# locked sections allocate nothing GC-tracked, so no finalizer re-enters).
 _CACHE_REFS: dict = {}
+_CACHE_REFS_LOCK = threading.Lock()
 
 
 def _unpersist_with(result: DataFrame, cached: DataFrame) -> DataFrame:
@@ -69,18 +73,21 @@ def _unpersist_with(result: DataFrame, cached: DataFrame) -> DataFrame:
             cached.sparkSession.sparkContext.applicationId,
             jdf.queryExecution().analyzed().semanticHash(),
         )
+    except Exception:
+        # py4j hiccup: without the key a sibling sharing the plan cannot be
+        # told apart, and uncaching it mid-use is worse than leaking the entry
+        return result
+    with _CACHE_REFS_LOCK:
         _CACHE_REFS[key] = _CACHE_REFS.get(key, 0) + 1
-    except Exception:  # py4j hiccup: fall back to unrefcounted release
-        key = None
 
     def _cleanup(jdf=jdf, key=key):
+        with _CACHE_REFS_LOCK:
+            left = _CACHE_REFS.get(key, 1) - 1
+            if left > 0:  # a sibling with the same cached plan is live
+                _CACHE_REFS[key] = left
+                return
+            _CACHE_REFS.pop(key, None)
         try:  # session may already be stopped at interpreter shutdown
-            if key is not None:
-                left = _CACHE_REFS.get(key, 1) - 1
-                if left > 0:  # a sibling with the same cached plan is live
-                    _CACHE_REFS[key] = left
-                    return
-                _CACHE_REFS.pop(key, None)
             jdf.unpersist(False)
         except Exception:
             pass

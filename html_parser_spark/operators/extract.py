@@ -14,6 +14,10 @@ Scale notes (100 TB / 1000 executors):
   build + extraction are fused in a single mapInArrow stage (SURVEY.md §7.3);
   the crossing moves flat Arrow child arrays, never per-span Python dicts
   (the pandas crossing is kept as a tested fallback, use_arrow=False).
+  On small docs the crossing's cost is per TASK, not per byte: the Arrow
+  transfer is small next to the Python worker's per-task setup, whose
+  largest part (re-reading Spark's zip archives on every task) the
+  package's import removes (html_parser_spark/_zipcache.py).
 - Skew: mega-documents are row-atomic, so the defense is (a) salted
   repartitioning — salt_by='hash' spreads docs uniformly on the raw
   xxhash64(doc_id); salt_by='bytes' is SIZE-WEIGHTED: an AQE REBALANCE on
@@ -152,9 +156,10 @@ def _process_arrow_batch(pa, batch, heur, n_buckets, schema):
     list<struct> column is decomposed into its flat child arrays (one C
     pass per column), per-document slices are cut by the list offsets, and
     the output list<struct> is rebuilt from flat arrays + offsets. This
-    roughly halves crossing overhead vs the pandas path (measured in
-    BASELINE.md); the pandas kernel (_process_batch) remains the semantic
-    twin and both are pinned to the same oracle by test_spark_extract."""
+    roughly halves the Python-side conversion work vs the pandas path
+    (measured in BASELINE.md); the pandas kernel (_process_batch) remains
+    the semantic twin and both are pinned to the same oracle by
+    test_spark_extract."""
     from ..kernels.extract import process_document_flat
 
     idx_doc = batch.schema.get_field_index("doc_id")

@@ -7,6 +7,11 @@ minhash_lsh_pairs per input slice must not accumulate cached tables."""
 from __future__ import annotations
 
 import gc
+import sys
+import threading
+from types import SimpleNamespace
+
+from py4j.protocol import Py4JError
 
 from html_parser_spark.functions import dedup as DD
 
@@ -60,3 +65,103 @@ def test_minhash_lsh_cache_released_in_loop(spark):
         del pairs
     gc.collect()
     assert _cache_empty(spark), "repeated calls must not accumulate cached tables"
+
+
+class _HashlessJdf:
+    """A cached plan handle whose semanticHash lookup fails over py4j."""
+
+    def __init__(self, jdf):
+        self._jdf = jdf
+
+    def queryExecution(self):
+        raise Py4JError("semanticHash unavailable")
+
+    def unpersist(self, blocking):
+        return self._jdf.unpersist(blocking)
+
+
+def test_hash_failure_never_uncaches_live_sibling(spark, monkeypatch):
+    """Without a semantic-hash key the refcount cannot tell a sibling that
+    shares the cached plan apart, so registration must leak the entry rather
+    than unpersist it when the unkeyed result dies."""
+    spark.catalog.clearCache()
+    corpus = _corpus(spark)
+    live = DD.jaccard_pairs(corpus, threshold_permille=500)
+    real = DD._unpersist_with
+    monkeypatch.setattr(
+        DD,
+        "_unpersist_with",
+        lambda result, cached: real(
+            result,
+            SimpleNamespace(_jdf=_HashlessJdf(cached._jdf), sparkSession=cached.sparkSession),
+        ),
+    )
+    unkeyed = DD.jaccard_pairs(corpus, threshold_permille=500)  # same plan
+    unkeyed.count()
+    del unkeyed
+    gc.collect()
+    assert not _cache_empty(spark), "an unkeyed result's GC must not uncache the entry"
+    live.count()
+    del live
+    gc.collect()
+    assert _cache_empty(spark), "the keyed owner still releases the shared entry"
+
+
+class _CountingJdf:
+    """A cached plan handle with a fixed semantic hash that records unpersists."""
+
+    def __init__(self):
+        self.unpersists = []
+
+    def queryExecution(self):
+        return self
+
+    def analyzed(self):
+        return self
+
+    def semanticHash(self):
+        return 7
+
+    def unpersist(self, blocking):
+        self.unpersists.append(blocking)
+
+
+class _Result:
+    """Stands in for a returned DataFrame (only needs to be weak-referenceable)."""
+
+
+def test_refcount_survives_concurrent_owners():
+    """Finalizers run on whichever thread drops the last reference: many
+    threads registering and releasing owners of one cached plan must neither
+    lose a count (the entry is released early or never) nor release twice."""
+    jdf = _CountingJdf()
+    app = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="refcount-stress"))
+    cached = SimpleNamespace(_jdf=jdf, sparkSession=app)
+    key = ("refcount-stress", 7)
+    n_threads, per_thread = 16, 200
+    registered = threading.Barrier(n_threads + 1, timeout=60)
+    counted = threading.Barrier(n_threads + 1, timeout=60)
+
+    def owner():
+        held = [DD._unpersist_with(_Result(), cached) for _ in range(per_thread)]
+        registered.wait()
+        counted.wait()
+        held.clear()  # each finalizer runs here, on this thread
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=owner) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        registered.wait()
+        live = DD._CACHE_REFS.get(key)
+        counted.wait()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert live == n_threads * per_thread
+    assert key not in DD._CACHE_REFS
+    assert jdf.unpersists == [False], "the last owner releases the entry exactly once"

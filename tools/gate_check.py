@@ -8,6 +8,7 @@ when every value matches — the text_tfidf bug class; DESCRIBE catches it
 here without re-running the query).
 
 Usage: PYTHONPATH=/root/repo python tools/gate_check.py [--json OUT] [sf_dir] [query ...]
+sf_dir may be a bare scale factor (0.01, sf0.1) for that scale's test tables.
 With no positional arguments, runs BOTH sf0.01 and sf0.1 (type drift and
 int64 headroom bugs only show up under typed hashing or bigger data).
 --json OUT additionally writes a driver-style correctness record per query
@@ -20,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -185,6 +187,15 @@ def run_gate(spark, sf_dir: str, only: set[str], records: dict | None = None) ->
     return failures
 
 
+def sf_dir_arg(arg: str) -> str:
+    """A bare scale factor ('0.01' or 'sf0.01') names that scale's table
+    directory in the shared test data; anything else is a path."""
+    m = re.fullmatch(r"(?:sf)?(\d*\.?\d+)", arg)
+    if m is None or os.path.isdir(arg):
+        return arg
+    return f"/root/testdata/sf{m.group(1)}"
+
+
 def main():
     argv = sys.argv[1:]
     json_out = None
@@ -193,7 +204,7 @@ def main():
         json_out = argv[i + 1]
         argv = argv[:i] + argv[i + 2 :]
     if argv:
-        sf_dirs = [argv[0]]
+        sf_dirs = [sf_dir_arg(argv[0])]
         only = set(argv[1:])
     else:
         sf_dirs = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
